@@ -27,6 +27,7 @@ tokenize stage.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -225,6 +226,21 @@ def term_position_entries(tokens: Column) -> Column:
     ).otherwise(_bind(F.array_sort(pairs), with_sorted))
 
 
+def _int32_offsets(lengths) -> np.ndarray:
+    """Arrow list offsets (``0, l0, l0+l1, ...``) as int32, the offset
+    width of Spark's ``array<int>``. Summed in int64 and checked, so a
+    batch holding more than 2^31-1 list elements raises instead of the
+    int32 cast wrapping silently into corrupt offsets."""
+    offs = np.concatenate(([0], np.cumsum(lengths, dtype=np.int64)))
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{int(offs[-1])} list elements in one Arrow batch exceed the "
+            "int32 offsets of array<int>; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    return offs.astype(np.int32)
+
+
 def positional_entries_frame(
     tok_arrays: DataFrame, num_segments: int | None = None
 ) -> DataFrame:
@@ -258,8 +274,8 @@ def positional_entries_frame(
     one core)."""
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         for rb in batches:
             nrows = rb.num_rows
@@ -293,13 +309,12 @@ def positional_entries_frame(
             tf = np.diff(np.concatenate((starts, [total])))
             doc_ids = doc.to_numpy()
             cols = [
-                pa.compute.take(enc.dictionary, pa.array(sc[starts])),
+                pc.take(enc.dictionary, pa.array(sc[starts])),
                 pa.array(doc_ids[sd[starts]], type=pa.int64()),
                 pa.array(tf, type=pa.int64()),
                 pa.array(lens[sd[starts]], type=pa.int64()),
                 pa.ListArray.from_arrays(
-                    pa.array(np.concatenate(([0], np.cumsum(tf))).astype(np.int32),
-                             type=pa.int32()),
+                    pa.array(_int32_offsets(tf), type=pa.int32()),
                     pa.array(sp.astype(np.int32), type=pa.int32()),
                 ),
             ]

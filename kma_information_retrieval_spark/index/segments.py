@@ -83,7 +83,7 @@ import os
 import time
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -856,12 +856,24 @@ def decoded_postings_frame(seg: DataFrame) -> DataFrame:
 
 @dataclass
 class SegmentIndex:
+    """Query handle on a built index directory.
+
+    The handle is a snapshot: each table is opened (files listed, schema
+    read — one Spark job) on first use and that DataFrame is reused by
+    every later query. After rebuilding into the same directory, call
+    :func:`load_index` again for a new handle."""
+
     spark: SparkSession
     out_dir: str
     meta: dict
+    _tables: dict[str, DataFrame] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
 
     def _table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_dir, name))
+        if name not in self._tables:
+            self._tables[name] = self.spark.read.parquet(os.path.join(self.out_dir, name))
+        return self._tables[name]
 
     def _has(self, name: str) -> bool:
         return os.path.isdir(os.path.join(self.out_dir, name))

@@ -19,13 +19,19 @@ Three scorers over the segment layout built by ``segments.build_index``
   pivot selection churns.
 
 All three are bit-identical in output (fuzzed in
-``tests/test_wand_fuzz.py``) and run inside ``applyInPandas`` grouped
-by query_id, so a batch of
-queries fans out across executors while each query's merge stays local
-— the partition-pruned parquet read (see ``SegmentIndex.query_segments``)
-feeds only the needed (part_id, term) rows. Exactness contract matches
-the oracle: float64, per-doc contributions summed in lexicographic term
-order, tie-break (score DESC, doc_id ASC).
+``tests/test_wand_fuzz.py``) and take segment rows as records (dicts).
+:func:`score_shards` runs them: one ``applyInArrow`` call per shard
+receives the shard's segment rows as one Arrow table (only the columns
+the kernel reads) and scores every query of the batch from them. On a
+doc-disjoint shard — a ``part_id`` of the doc layout, a generation of a
+streaming index — each doc's score is complete inside the shard, so the
+shards' local top-k rows merge into the global top-k
+(:func:`merge_local_topk`). On the term layout a query's lists span
+parts, so the shard is the query itself. The partition-pruned parquet
+read (see ``SegmentIndex.query_segments``) feeds only the needed
+(part_id, term) rows. Exactness contract matches the oracle: float64,
+per-doc contributions summed in lexicographic term order, tie-break
+(score DESC, doc_id ASC).
 """
 
 from __future__ import annotations
@@ -147,17 +153,19 @@ _EXHAUSTED = 2**62
 # ------------------------------------------------------------------ kernels
 
 
-def _exact_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float, k: int,
+def _exact_kernel(rows: list[dict], idf_by_term: dict, avgdl: float, k: int,
+                  rescale_bounds: bool = False,
                   deleted: frozenset | None = None):
     """Full-decode scoring with deterministic term-ordered summation.
+    ``rows`` are segment-row records; ``rescale_bounds`` is accepted so
+    all three kernels share one signature (no bounds are used here).
     ``deleted`` (tombstoned doc ids) are masked out before scoring —
     exactly as if their postings were never indexed."""
     terms = sorted(idf_by_term)
     rank = {t: i for i, t in enumerate(terms)}
     doc_parts, contrib_parts, rank_parts = [], [], []
-    for _, row in rows.iterrows():
+    for row in rows:
         idf = idf_by_term[row["term"]]
-        d_off, t_off, l_off = row["block_doc_off"], row["block_tf_off"], row["block_dl_off"]
         gaps = vb_decode(bytes(row["doc_bytes"]))
         # rebuild absolute ids block by block (first gap of each block is
         # relative to the previous block's last doc)
@@ -198,7 +206,7 @@ def _exact_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float, k: int,
     return [(int(uniq[i]), float(scores[i])) for i in sel]
 
 
-def _wand_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float, k: int,
+def _wand_kernel(rows: list[dict], idf_by_term: dict, avgdl: float, k: int,
                  rescale_bounds: bool = False,
                  deleted: frozenset | None = None):
     """Block-Max WAND. Exact top-k: pruning uses strict bounds, ties at
@@ -208,7 +216,7 @@ def _wand_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float, k: int,
     removing docs can only lower true block maxima."""
     cursors = [
         _Cursor(row, idf_by_term[row["term"]], avgdl, rescale=rescale_bounds)
-        for _, row in rows.iterrows()
+        for row in rows
     ]
     cursors = [c for c in cursors if c.cur_doc != _EXHAUSTED]
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
@@ -283,7 +291,7 @@ def _wand_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float, k: int,
     return [(-nd, s) for s, nd in out]
 
 
-def _maxscore_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float,
+def _maxscore_kernel(rows: list[dict], idf_by_term: dict, avgdl: float,
                      k: int, rescale_bounds: bool = False,
                      deleted: frozenset | None = None):
     """Document-at-a-time MaxScore (Turtle & Flood 1995) — the other
@@ -310,7 +318,7 @@ def _maxscore_kernel(rows: pd.DataFrame, idf_by_term: dict, avgdl: float,
     """
     cursors = [
         _Cursor(row, idf_by_term[row["term"]], avgdl, rescale=rescale_bounds)
-        for _, row in rows.iterrows()
+        for row in rows
     ]
     cursors = [c for c in cursors if c.cur_doc != _EXHAUSTED]
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
@@ -398,6 +406,21 @@ def _pick_kernel(use_wand: bool, strategy: str | None):
     return _wand_kernel if use_wand else _exact_kernel
 
 
+# segment columns each kernel reads: the exact kernel decodes whole
+# lists; the pruning kernels also walk block metadata and need either
+# the stored (avgdl-baked) impacts or the raw bounds they rescale
+_DECODE_COLS = ["term", "doc_bytes", "tf_bytes", "dl_bytes"]
+_BLOCK_COLS = ["block_last", "block_doc_off", "block_tf_off", "block_dl_off"]
+_STORED_BOUNDS = ["max_impact", "block_max_impact"]
+_RAW_BOUNDS = ["max_tf", "min_dl", "block_max_tf", "block_min_dl"]
+
+
+def _kernel_columns(kern, rescale_bounds: bool) -> list[str]:
+    if kern is _exact_kernel:
+        return _DECODE_COLS
+    return _DECODE_COLS + _BLOCK_COLS + (_RAW_BOUNDS if rescale_bounds else _STORED_BOUNDS)
+
+
 # ------------------------------------------------------------------ public API
 
 
@@ -405,25 +428,18 @@ def make_topk_kernel(idf_all: dict, qterms: dict, avgdl: float, k: int,
                      use_wand: bool, rescale_bounds: bool = False,
                      deleted: frozenset | None = None,
                      strategy: str | None = None):
-    """applyInPandas kernel: group key[0] must be query_id; scores each
-    group's segment rows and returns that group's top-k.
-    ``rescale_bounds``: derive WAND bounds from the raw (block_max_tf,
-    block_min_dl) metadata under ``avgdl`` instead of the stored
-    impacts — required whenever ``avgdl`` differs from the avgdl the
-    segments were encoded with (cross-generation queries).
-    ``deleted``: tombstoned doc ids masked out of scoring (streaming
-    deletes; Lucene semantics — stats stay build-time until compaction)."""
-
+    """``(key, pandas frame)`` adapter over the top-k kernels, for
+    scoring collected segment rows outside Spark: ``key[0]`` is a query
+    id of ``qterms``, the frame holds that query's segment rows, and
+    the result is its top-k as a (query_id, doc_id, score) frame.
+    Queries inside Spark go through :func:`score_shards`."""
     kern = _pick_kernel(use_wand, strategy)
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qid = key[0]
         idf_by_term = {t: idf_all[t] for t in qterms[qid] if t in idf_all}
-        if kern is _exact_kernel:
-            top = kern(pdf, idf_by_term, avgdl, k, deleted=deleted)
-        else:
-            top = kern(pdf, idf_by_term, avgdl, k,
-                       rescale_bounds=rescale_bounds, deleted=deleted)
+        top = kern(pdf.to_dict("records"), idf_by_term, avgdl, k,
+                   rescale_bounds=rescale_bounds, deleted=deleted)
         return pd.DataFrame(
             {"query_id": qid, "doc_id": [d for d, _ in top], "score": [s for _, s in top]}
         )
@@ -431,41 +447,89 @@ def make_topk_kernel(idf_all: dict, qterms: dict, avgdl: float, k: int,
     return run
 
 
-def make_rowidf_kernel(n_docs: int, avgdl: float, k: int, use_wand: bool,
-                       rescale_bounds: bool = False,
-                       deleted: frozenset | None = None,
-                       strategy: str | None = None):
-    """applyInPandas kernel for the distributed-expansion path: per-term
-    ``df`` arrives as a COLUMN on the segment rows (attached by a
-    dictionary join) instead of a driver-side dict, so the term set
-    never materializes on the driver; idf is then computed INSIDE the
-    kernel with the same CPython ``math.log`` the dict-idf path uses.
-    (An earlier version attached a Catalyst ``F.log`` idf column — JVM
-    ``Math.log`` and CPython's libm are each ~1-ulp-accurate but NOT
-    bit-identical: measured divergence on this platform at df=8,
-    n_docs=10, caught by ``tests/test_wand_fuzz.py``. Rank identity
-    across the dict/rowidf/streaming paths must be bit-exact, so both
-    paths now share one log implementation.) ``rescale_bounds`` as in
-    :func:`make_topk_kernel` (cross-generation avgdl)."""
+def score_shards(
+    tagged: DataFrame,
+    shard: str,
+    queries: dict[str, list[str] | None],
+    k: int,
+    avgdl: float,
+    idf: dict[str, float] | None = None,
+    n_docs: int = 0,
+    use_wand: bool = True,
+    strategy: str | None = None,
+    rescale_bounds: bool = False,
+    deleted: frozenset | None = None,
+) -> DataFrame:
+    """Top-k per query: (query_id, doc_id, score), <= k rows per query.
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = key[0]
-        # "gdf" = corpus-global df from the dictionary join (the segment
-        # rows' own "df" is the per-(term,salt)-group posting count)
-        idf_by_term = {
-            t: _idf(int(d), n_docs) for t, d in zip(pdf["term"], pdf["gdf"])
-        }
-        kern = _pick_kernel(use_wand, strategy)
-        if kern is _exact_kernel:
-            top = kern(pdf, idf_by_term, avgdl, k, deleted=deleted)
+    ``tagged`` holds the segment rows of the batch's terms and a
+    ``shard`` column. Each shard is one ``groupBy(shard).applyInArrow``
+    call: the shard's rows arrive as one Arrow table, are turned into
+    records once, and every query of ``queries`` is scored from the
+    rows of its own terms. A query with no rows in a shard yields
+    nothing there, so a query whose terms are all absent returns no
+    rows.
+
+    * ``shard="query_id"`` (term layout): the shard is one query —
+      ``tagged`` carries each row once per query using its term — and
+      its top-k is final.
+    * any other shard (``part_id`` of the doc layout, ``gen`` across
+      generations) must be doc-disjoint: every doc's postings sit in
+      one shard, so local scores are complete and
+      :func:`merge_local_topk` keeps the best k of <= shards*k rows.
+      Each doc is still summed in lexicographic term order inside one
+      kernel, so scores are bit-identical to a single-task scan.
+
+    ``queries`` maps query id -> terms; ``None`` terms mean every term
+    in the rows (a wildcard expansion that never reaches the driver).
+    ``idf`` maps term -> idf. Without it, idf is computed in the kernel
+    from each row's corpus-global ``gdf`` column and ``n_docs``, with
+    the same CPython ``math.log`` as the dict path (a Catalyst
+    ``F.log`` column is 1 ulp off ``math.log`` for some inputs, which
+    breaks bit-exact identity between the two paths).
+    ``rescale_bounds``: derive pruning bounds from the raw
+    (block_max_tf, block_min_dl) metadata under ``avgdl`` instead of
+    the stored impacts — needed whenever ``avgdl`` differs from the one
+    the segments were encoded with (cross-generation queries).
+    ``deleted``: tombstoned doc ids masked out of scoring (streaming
+    deletes; Lucene semantics — stats stay build-time until
+    compaction)."""
+    import pyarrow as pa
+
+    kern = _pick_kernel(use_wand, strategy)
+    queries = {q: None if ts is None else sorted(set(ts)) for q, ts in queries.items()}
+    cols = [shard] + _kernel_columns(kern, rescale_bounds) + (["gdf"] if idf is None else [])
+
+    def run(key: tuple, table: pa.Table) -> pa.Table:
+        rows = table.to_pylist()
+        by_term: dict[str, list[dict]] = {}
+        for r in rows:
+            by_term.setdefault(r["term"], []).append(r)
+        if idf is None:
+            idf_by_term = {t: _idf(rs[0]["gdf"], n_docs) for t, rs in by_term.items()}
         else:
-            top = kern(pdf, idf_by_term, avgdl, k,
+            idf_by_term = idf
+        scored = queries
+        if shard == "query_id":
+            qid = key[0].as_py()
+            scored = {qid: queries[qid]}
+        qids, docs, scores = [], [], []
+        for qid, terms in scored.items():
+            terms = [t for t in (sorted(by_term) if terms is None else terms) if t in by_term]
+            top = kern([r for t in terms for r in by_term[t]],
+                       {t: idf_by_term[t] for t in terms}, avgdl, k,
                        rescale_bounds=rescale_bounds, deleted=deleted)
-        return pd.DataFrame(
-            {"query_id": qid, "doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
+            qids += [qid] * len(top)
+            docs += [d for d, _ in top]
+            scores += [s for _, s in top]
+        return pa.table({
+            "query_id": pa.array(qids, pa.string()),
+            "doc_id": pa.array(docs, pa.int64()),
+            "score": pa.array(scores, pa.float64()),
+        })
 
-    return run
+    local = tagged.select(*cols).groupBy(shard).applyInArrow(run, schema=RESULT_SCHEMA)
+    return local if shard == "query_id" else merge_local_topk(local, k)
 
 
 def bm25_topk_terms_frame(
@@ -484,11 +548,8 @@ def bm25_topk_terms_frame(
     Fully distributed shape, mirroring the boolean path's
     ``_docs_of_terms`` (``operators/boolean.py``): the term frame joins
     the dictionary to attach each term's corpus-global df as a row
-    column (idf itself is computed inside the kernel with CPython
-    ``math.log`` — see :func:`make_rowidf_kernel`; a Catalyst ``F.log``
-    idf column was measured to diverge from ``math.log`` by 1 ulp on
-    this platform, breaking bit-exact rank identity with the dict-idf
-    path), then —
+    column (``gdf``; idf itself is computed inside the kernel with
+    CPython ``math.log`` — see :func:`score_shards`), then —
     term layout — joins the saltmap to enumerate each term's (salt,
     part_id) pairs so the segment join carries ``part_id`` equality —
     the broadcast hash join drops non-candidate (part_id, term) rows at
@@ -497,16 +558,16 @@ def bm25_topk_terms_frame(
     ``dynamicpruningexpression(part_id IN ...)`` in the audited plan),
     so only candidate part directories are read — the collected path's
     partition pruning, without driver materialization. Scoring reuses
-    the same exact/WAND kernels with idf read from a row column.
+    the same exact/WAND kernels through :func:`score_shards`.
 
     Scale limit (term layout): the joins are fully distributed, but
-    scoring groups by ``query_id`` alone, so one query's entire
-    expansion funnels into a single applyInPandas task — an unselective
-    pattern (``*a*``) at a 10^9-term vocab makes that task the
-    straggler/OOM point even though nothing touches the driver. For
-    such patterns build with ``partition_by="doc"``: the kernel then
-    runs per (query_id, part_id) with complete local scores and the
-    existing <= parts*k global merge distributes the scoring too."""
+    the query is the term layout's scoring shard, so one query's entire
+    expansion funnels into a single task — an unselective pattern
+    (``*a*``) at a 10^9-term vocab makes that task the straggler/OOM
+    point even though nothing touches the driver. For such patterns
+    build with ``partition_by="doc"``: the kernel then runs per
+    ``part_id`` with complete local scores and the <= parts*k global
+    merge distributes the scoring too."""
     from .segments import _part_id_col
 
     n_docs, avgdl = index.meta["n_docs"], index.meta["avgdl"]
@@ -539,14 +600,11 @@ def bm25_topk_terms_frame(
         tagged = index.segments.join(tagged_terms, ["part_id", "term"])
     else:
         tagged = index.segments.join(tdf, "term")
-    tagged = tagged.withColumn("query_id", F.lit(query_id))
-    run = make_rowidf_kernel(n_docs, avgdl, k, use_wand)
     if doc_layout:
-        local = tagged.groupBy("query_id", "part_id").applyInPandas(
-            run, schema=RESULT_SCHEMA
-        )
-        return merge_local_topk(local, k)
-    return tagged.groupBy("query_id").applyInPandas(run, schema=RESULT_SCHEMA)
+        return score_shards(tagged, "part_id", {query_id: None}, k, avgdl,
+                            n_docs=n_docs, use_wand=use_wand)
+    return score_shards(tagged.withColumn("query_id", F.lit(query_id)), "query_id",
+                        {query_id: None}, k, avgdl, n_docs=n_docs, use_wand=use_wand)
 
 
 def merge_local_topk(local: DataFrame, k: int) -> DataFrame:
@@ -573,48 +631,44 @@ def bm25_topk_batch(
     (query_id, doc_id, score), <= k rows per query, ordered by
     (score DESC, doc_id ASC) within each query.
 
-    Term-partitioned index: the parquet scan is pruned to the union of
-    candidate part_ids and query terms; each query's merge runs in one
-    applyInPandas task, so a query batch saturates the cluster while
-    individual merges stay local. A stop-word query at 10^12 docs would
-    make that one task a straggler — which is exactly what the doc
-    layout exists for.
-
     Doc-partitioned index (``build_index(partition_by="doc")``): every
-    partition holds all query terms for a disjoint doc subset, so the
-    kernel runs per (query_id, part_id) — an *exact* local top-k
-    (scores complete within the partition) — and a global merge keeps
-    the best k of <= parts*k candidate rows per query. Scores are
-    bit-identical to the single-task path: each doc's score is summed
-    in lexicographic term order inside exactly one local kernel.
+    partition holds all query terms for a disjoint doc subset, so each
+    ``part_id`` is one :func:`score_shards` call that scores the whole
+    batch — an *exact* local top-k per query (scores complete within
+    the partition) — and a global merge keeps the best k of <= parts*k
+    candidate rows per query.
+
+    Term-partitioned index: the parquet scan is pruned to the union of
+    candidate part_ids and query terms; rows are tagged with the ids of
+    the queries using their term inside the plan (a literal term ->
+    query-ids map, exploded), and each query is scored in one task, so
+    a query batch saturates the cluster while individual merges stay
+    local. A stop-word query at 10^12 docs would make that one task a
+    straggler — which is exactly what the doc layout exists for.
     """
     spark = index.spark
-    all_terms = sorted({t for ts in queries.values() for t in sorted(set(ts))})
+    all_terms = sorted({t for ts in queries.values() for t in ts})
     if not all_terms:
         return spark.createDataFrame([], RESULT_SCHEMA)
     n_docs, avgdl = index.meta["n_docs"], index.meta["avgdl"]
 
     df_rows = index.dictionary.filter(F.col("term").isin(all_terms)).collect()
-    global_df = {r["term"]: r["df"] for r in df_rows}
-
-    qmap = spark.createDataFrame(
-        [(qid, t) for qid, ts in queries.items() for t in sorted(set(ts)) if t in global_df],
-        "query_id string, term string",
-    )
+    idf = {r["term"]: _idf(r["df"], n_docs) for r in df_rows}
     seg = index.query_segments(all_terms)
-    tagged = seg.join(F.broadcast(qmap), "term")
-
-    idf_all = {t: _idf(d, n_docs) for t, d in global_df.items()}
-    qterms = {qid: sorted(set(ts)) for qid, ts in queries.items()}
-
-    run = make_topk_kernel(idf_all, qterms, avgdl, k, use_wand,
-                           strategy=strategy)
     if index.meta.get("partition_by") == "doc":
-        local = tagged.groupBy("query_id", "part_id").applyInPandas(
-            run, schema=RESULT_SCHEMA
-        )
-        return merge_local_topk(local, k)
-    return tagged.groupBy("query_id").applyInPandas(run, schema=RESULT_SCHEMA)
+        return score_shards(seg, "part_id", queries, k, avgdl, idf=idf,
+                            use_wand=use_wand, strategy=strategy)
+    qids_of_term: dict[str, list[str]] = {}
+    for qid, ts in queries.items():
+        for t in sorted(set(ts)):
+            qids_of_term.setdefault(t, []).append(qid)
+    qids_map = F.create_map(*[
+        c for t, qs in sorted(qids_of_term.items())
+        for c in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
+    ])
+    tagged = seg.withColumn("query_id", F.explode(F.element_at(qids_map, F.col("term"))))
+    return score_shards(tagged, "query_id", queries, k, avgdl, idf=idf,
+                        use_wand=use_wand, strategy=strategy)
 
 
 def bm25_topk_segments(

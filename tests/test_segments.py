@@ -274,7 +274,9 @@ def test_term_position_entries_matches_groupby(spark, docs):
     # tiny-batch path: a batch smaller than one doc's tokens never
     # occurs (batches are row-aligned), but multi-batch task streams do
     # — force 2-row batches and re-check
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev_batch = spark.conf.get(batch_key)
+    spark.conf.set(batch_key, "2")
     try:
         c2 = positional_entries_frame(tok_arrays).select(
             "term", "doc_id", "tf", "dl", F.to_json("positions").alias("p")
@@ -282,4 +284,4 @@ def test_term_position_entries_matches_groupby(spark, docs):
         assert c2.count() == a.count()
         assert a.exceptAll(c2).count() == 0
     finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        spark.conf.set(batch_key, prev_batch)

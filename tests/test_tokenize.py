@@ -3,9 +3,15 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
-from kma_information_retrieval_spark.functions.tokenize import bigrams_expr, tokenize_expr
+from kma_information_retrieval_spark.functions.tokenize import (
+    _int32_offsets,
+    bigrams_expr,
+    tokenize_expr,
+)
 from kma_information_retrieval_spark.oracle import tokenize as py_tokenize
 
 
@@ -60,3 +66,15 @@ def test_bigrams_short_doc(spark):
     df = spark.createDataFrame([("single",), ("a b",)], "content string")
     got = [r["b"] for r in df.select(bigrams_expr(tokenize_expr("content")).alias("b")).collect()]
     assert got == [[], []]
+
+
+def test_positions_offsets_refuse_int32_overflow():
+    """The positions column's list offsets are int32 (array<int>): a
+    batch whose summed tfs pass 2^31-1 must raise, not wrap."""
+    limit = np.iinfo(np.int32).max
+    got = _int32_offsets(np.array([3, 0, 2], dtype=np.int64))
+    assert got.dtype == np.int32
+    assert got.tolist() == [0, 3, 3, 5]
+    assert _int32_offsets(np.array([limit - 1, 1]))[-1] == limit
+    with pytest.raises(OverflowError):
+        _int32_offsets(np.array([limit, 1], dtype=np.int64))

@@ -69,7 +69,8 @@ def encode_rows(postings, dl, avgdl_build, split_salt, block_size=4):
           suppress_health_check=[HealthCheck.too_slow])
 def test_wand_equals_exact(c):
     n_docs, dl, postings, avgdl_build, avgdl_query, k, split_salt = c
-    rows = encode_rows(postings, dl, avgdl_build, split_salt)
+    # the kernels take segment rows as records, as score_shards passes them
+    rows = encode_rows(postings, dl, avgdl_build, split_salt).to_dict("records")
     rng = np.random.default_rng(0)
     idf = {t: float(0.1 + 3.0 * rng.random()) for t in postings}
 
@@ -103,7 +104,7 @@ def test_catalyst_log_vs_math_log_divergence(spark):
     libm log are each ~1-ulp-accurate but are NOT bit-identical — on
     this platform they diverge at e.g. (df=8, n_docs=10), where F.log
     gives 0.2578291093020998 and math.log 0.25782910930209985. That is
-    why make_rowidf_kernel receives the raw df column and computes idf
+    why score_shards receives the raw df column and computes idf
     with math.log inside the kernel (one log implementation across the
     dict-idf, rowidf and streaming paths) instead of attaching a
     Catalyst idf column. This test pins the 1-ulp envelope — if the
