@@ -425,7 +425,9 @@ def _common_build_args(p: argparse.ArgumentParser, default_mode: str) -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--mode", default=default_mode,
                    choices=["code", "letters", "unicode"])
-    p.add_argument("--num-segments", type=int, default=32)
+    p.add_argument("--num-segments", type=int, default=None,
+                   help="segment partitions; default: sized from the input, "
+                        "one per 4 MiB of document text, between 1 and 32")
     p.add_argument("--memory-limit", type=int, default=50_000,
                    help="salting target: max postings per (term, salt) group")
     p.add_argument("--partition-by", choices=["term", "doc", "auto"], default="auto")
@@ -546,7 +548,9 @@ def build_parser() -> argparse.ArgumentParser:
     c = sub.add_parser("compact", help="merge generations into one; applies "
                                        "tombstones and refreshes stats")
     c.add_argument("--index", required=True, help="generation index dir")
-    c.add_argument("--num-segments", type=int, default=32)
+    c.add_argument("--num-segments", type=int, default=None,
+                   help="segment partitions; default: sized from the sources' "
+                        "summed input bytes, one per 4 MiB, between 1 and 32")
     c.set_defaults(fn=cmd_compact)
 
     pi = sub.add_parser("parquet-inspect", help="print schema + sample rows")

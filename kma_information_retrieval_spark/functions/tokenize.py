@@ -87,30 +87,29 @@ def fan_out(df: DataFrame) -> DataFrame:
     the session has (measured: the sf1.0 documents table scans as 2
     splits, so every tokenizing operator ran its hottest stage at 2/32
     cores). File count comes from scan metadata — no job is submitted.
-    Non-file frames (createDataFrame, post-shuffle results) and inputs
-    that already have >= parallelism splits pass through untouched, so
-    at real scale this no-ops. Same policy as the index build's fan-out
-    (index/segments.py)."""
-    try:
-        n_in = len(df.inputFiles())
-        if n_in == 0:
-            # a cached frame's analyzed plan is the InMemoryRelation,
-            # so inputFiles() reports no file scan. Probe the cached
-            # relation's partition count instead — but ONLY for frames
-            # that are actually marked for caching: on an uncached
-            # shuffle-bearing frame, .rdd finalizes the adaptive plan
-            # and EXECUTES its stages at plan-build time, which this
-            # helper must never do. (storageLevel is plan metadata —
-            # no job either way.) The bench corpora are cached
-            # 1-2-split scans, exactly the frames that need the
-            # fan-out most; uncached non-file frames pass through.
-            from pyspark import StorageLevel
-
-            if df.storageLevel == StorageLevel.NONE:
-                return df
-            n_in = df.rdd.getNumPartitions()
-    except Exception:
+    Non-file frames (createDataFrame, post-shuffle results), streaming
+    frames (their plan cannot be inspected outside a running query) and
+    inputs that already have >= parallelism splits pass through
+    untouched, so at real scale this no-ops. The index build fans its
+    source out through this function too."""
+    if df.isStreaming:
         return df
+    n_in = len(df.inputFiles())
+    if n_in == 0:
+        # a cached frame's analyzed plan is the InMemoryRelation, so
+        # inputFiles() reports no file scan. Probe the cached relation's
+        # partition count instead — but ONLY for frames that are
+        # actually marked for caching: on an uncached shuffle-bearing
+        # frame, .rdd finalizes the adaptive plan and EXECUTES its
+        # stages at plan-build time, which this helper must never do.
+        # (storageLevel is plan metadata — no job either way.) The bench
+        # corpora are cached 1-2-split scans, exactly the frames that
+        # need the fan-out most; uncached non-file frames pass through.
+        from pyspark import StorageLevel
+
+        if df.storageLevel == StorageLevel.NONE:
+            return df
+        n_in = df.rdd.getNumPartitions()
     slots = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(slots) if 0 < n_in < slots else df
 

@@ -67,6 +67,15 @@ dictionary is aggregated once and written while stats collect; then
 the encode (dominant) runs alongside the saltmap/gram-table writes,
 all reading the materialized postings store.
 
+**Segment count follows the input** (:func:`segments_for_bytes`): one
+segment per ``SEGMENT_BYTES`` (4 MiB) of document text, at least 1 and
+at most ``MAX_SEGMENTS`` (32, reached at 128 MiB). The reference's
+SPIMI sizes its blocks by data volume the same way. Every segment is
+one encode task and one file per table directory, and at small sizes
+that per-task and per-file cost dominates the build, so a 50-doc
+generation builds as one segment. An explicit ``num_segments`` wins;
+a resume reuses the committed manifest's count.
+
 Hash choices are md5-based (not xxhash64) so the driver can compute a
 query term's candidate part_ids in pure Python and prune the parquet
 scan to those partitions.
@@ -107,6 +116,16 @@ SEGMENT_SCHEMA = (
     # per-generation avgdl (round-3 verdict #8)
     "max_tf long, min_dl long, block_max_tf array<long>, block_min_dl array<long>"
 )
+
+
+SEGMENT_BYTES = 4 << 20
+MAX_SEGMENTS = 32
+
+
+def segments_for_bytes(n_bytes: int) -> int:
+    """Segment count for ``n_bytes`` of document text: one segment per
+    ``SEGMENT_BYTES``, between 1 and ``MAX_SEGMENTS``."""
+    return min(MAX_SEGMENTS, max(1, -(-n_bytes // SEGMENT_BYTES)))
 
 
 def _stable_hash(s: str) -> int:
@@ -395,7 +414,7 @@ def build_index(
     id_col: str = "doc_id",
     text_col: str = "content",
     mode: str = "code",
-    num_segments: int = 32,
+    num_segments: int | None = None,
     postings_per_group: int = 50_000,
     max_salt: int = 64,
     block_size: int = 128,
@@ -413,6 +432,16 @@ def build_index(
     (and side tables that already have a ``_SUCCESS`` marker) and
     dynamically overwrites only missing segment partitions, so a rebuild
     after partial failure converges to the identical index.
+
+    ``num_segments`` is the number of segment partitions: ``part_id =
+    H(term, salt) % num_segments`` on the term layout, ``H(doc_id) %
+    num_segments`` on the doc layout, and the positional table's
+    ``H(term) % num_segments``. ``None`` (the default) sizes it from the
+    input, :func:`segments_for_bytes` of the text's UTF-8 byte total:
+    one segment per 4 MiB, between 1 and 32. The byte total is recorded
+    in the manifest as ``input_bytes``. A resume reuses the committed
+    manifest's count; the sizing is deterministic in the input, so a
+    resume after a build that died before committing sizes the same.
 
     ``partition_by``: "term" (pruned lookups), "doc" (distributed top-k
     merge), or "auto" (the default) — see the module docstring for the
@@ -444,26 +473,33 @@ def build_index(
     committed: dict = {}
     if resume and os.path.exists(manifest_path):
         with open(manifest_path) as f:
-            committed = json.load(f).get("partitions", {})
+            prior = json.load(f)
+        committed = prior.get("partitions", {})
+        if num_segments is None:
+            num_segments = prior["num_segments"]
 
-    base = docs.select(
+    from ..functions.tokenize import fan_out, tokenize_expr
+
+    # One aggregate over the source sizes the build: the doc count is
+    # the manifest's n_docs (token-free docs included), the byte total
+    # picks the segment count.
+    size_row = docs.agg(
+        F.count("*").alias("n"),
+        F.sum(F.octet_length(F.col(text_col))).alias("bytes"),
+    ).collect()[0]
+    n_docs = int(size_row["n"])
+    input_bytes = int(size_row["bytes"] or 0)
+    if num_segments is None:
+        num_segments = segments_for_bytes(input_bytes)
+    _mark("input_size", _t)
+
+    # The tokenize stage is the CPU hot path; fan a source with fewer
+    # splits than the cluster has slots out first (see fan_out).
+    base = fan_out(docs).select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("content"),
         *[F.col(c) for c in identity_cols],
     )
-    # The tokenize stage is the CPU hot path; if the source arrives in
-    # fewer splits than the cluster has slots (small files coalesced by
-    # maxPartitionBytes/openCost), fan it out first. File count is read
-    # from the scan metadata — no RDD materialization. At real scale the
-    # input has plenty of splits and this no-ops.
-    slots = spark.sparkContext.defaultParallelism
-    try:
-        n_in = len(docs.inputFiles())
-    except Exception:
-        n_in = 0
-    if 0 < n_in < slots:
-        base = base.repartition(slots)
-    from ..functions.tokenize import tokenize_expr
 
     tok_arrays = base.select("doc_id", tokenize_expr("content", mode).alias("toks"))
     if with_bigrams:
@@ -745,15 +781,8 @@ def build_index(
     bg_pool.shutdown()
     _mark("write_all", _t)
 
-    # ---- per-partition lineage + metrics -> manifest (n_docs counts
-    # every doc including token-free ones — parquet-footer count);
-    # independent jobs, submitted concurrently
-    with ThreadPoolExecutor(max_workers=1) as post:
-        f_count = post.submit(
-            lambda: spark.read.parquet(os.path.join(out_dir, "docmap")).count()
-        )
-        metrics = segment_metrics(spark, seg_dir)
-        n_docs = f_count.result()
+    # ---- per-partition lineage + metrics -> manifest
+    metrics = segment_metrics(spark, seg_dir)
     _mark("metrics", _t)
     elapsed = time.time() - t0
     partitions = dict(committed)
@@ -771,6 +800,7 @@ def build_index(
         "avgdl": avgdl,
         "avgdl_definition": "total_words / token-bearing docs",
         "total_words": total_words,
+        "input_bytes": input_bytes,
         "num_segments": num_segments,
         "partition_by": partition_by,
         "with_positions": with_positions,

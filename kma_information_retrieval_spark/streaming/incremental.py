@@ -30,12 +30,18 @@ from __future__ import annotations
 import glob
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.segments import build_index
+from ..index.segments import (
+    MAX_SEGMENTS,
+    SEGMENT_BYTES,
+    build_index,
+    segments_for_bytes,
+)
 
 
 def incremental_index_stream(
@@ -84,12 +90,28 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> None:
 
 @dataclass
 class GenerationIndex:
-    """Query view over all committed generations."""
+    """Query view over all committed generations.
+
+    Like :class:`~..index.segments.SegmentIndex`, the handle is a
+    snapshot: each generation's tables are opened once, on first use,
+    and reused by every later query. Tombstones are the exception and
+    are re-read per query, so a delete through :func:`delete_docs`
+    masks on an existing handle. After a compaction, or an append,
+    call :func:`load_generations` again."""
 
     spark: SparkSession
     out_dir: str
     gen_dirs: list[str]
     metas: list[dict]
+    _tables: dict[tuple[str, str], DataFrame] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def _table(self, gen_dir: str, name: str) -> DataFrame:
+        key = (gen_dir, name)
+        if key not in self._tables:
+            self._tables[key] = self.spark.read.parquet(os.path.join(gen_dir, name))
+        return self._tables[key]
 
     @property
     def n_docs(self) -> int:
@@ -109,7 +131,7 @@ class GenerationIndex:
         nt = self.n_docs_tokened
         return tw / nt if nt else 0.0
 
-    @property
+    @cached_property
     def segments(self) -> DataFrame:
         """Union of all generations' segments, tagged with a ``gen``
         column (a doc lives in exactly one generation, so generations
@@ -120,9 +142,7 @@ class GenerationIndex:
         WAND rescale path is gated on :attr:`have_bounds`, which
         requires EVERY generation to carry real bounds."""
         dfs = [
-            self.spark.read.parquet(os.path.join(g, "segments")).withColumn(
-                "gen", F.lit(i)
-            )
+            self._table(g, "segments").withColumn("gen", F.lit(i))
             for i, g in enumerate(self.gen_dirs)
         ]
         out = dfs[0]
@@ -155,23 +175,18 @@ class GenerationIndex:
     def have_bounds(self) -> bool:
         """True only when every generation's segments carry the raw
         WAND bounds columns (max_tf/min_dl/block_max_tf/block_min_dl).
-        Checked per generation from the parquet footers — the unioned
-        schema alone can't tell (allowMissingColumns fills nulls), and
-        cross-generation WAND must fall back to the exact kernel if ANY
-        generation predates the bounds columns."""
+        Checked per generation on the opened segment tables — the
+        unioned schema alone can't tell (allowMissingColumns fills
+        nulls), and cross-generation WAND must fall back to the exact
+        kernel if ANY generation predates the bounds columns."""
         need = {"max_tf", "min_dl", "block_max_tf", "block_min_dl"}
-        for g in self.gen_dirs:
-            cols = set(
-                self.spark.read.parquet(os.path.join(g, "segments"))
-                .schema.fieldNames()
-            )
-            if not need <= cols:
-                return False
-        return True
+        return all(
+            need <= set(self._table(g, "segments").columns) for g in self.gen_dirs
+        )
 
-    @property
+    @cached_property
     def dictionary(self) -> DataFrame:
-        dfs = [self.spark.read.parquet(os.path.join(g, "dictionary")) for g in self.gen_dirs]
+        dfs = [self._table(g, "dictionary") for g in self.gen_dirs]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -179,7 +194,7 @@ class GenerationIndex:
 
     def _union(self, name: str) -> DataFrame | None:
         dfs = [
-            self.spark.read.parquet(os.path.join(g, name))
+            self._table(g, name)
             for g in self.gen_dirs
             if os.path.isdir(os.path.join(g, name))
         ]
@@ -345,7 +360,7 @@ class GenerationIndex:
 def compact_generations(
     spark: SparkSession,
     out_dir: str,
-    num_segments: int = 32,
+    num_segments: int | None = None,
     postings_per_group: int = 50_000,
     max_salt: int = 64,
     block_size: int = 128,
@@ -379,6 +394,14 @@ def compact_generations(
     scratch over the surviving corpus (Lucene merge semantics; tested
     against exactly that oracle). A single generation WITH tombstones
     is also compacted (deletes alone justify the rewrite).
+
+    ``num_segments=None`` (the default) sizes the compacted generation
+    like :func:`~..index.segments.build_index` does, from the sum of
+    the source manifests' ``input_bytes``; a manifest without that
+    field counts as the cap, so the result gets ``MAX_SEGMENTS``. The
+    compacted manifest records the sum as its ``input_bytes`` (deleted
+    docs' text included — it is a sizing input, not a live-corpus
+    statistic), and omits it when a source lacked it.
     """
     import shutil
     import time
@@ -408,6 +431,10 @@ def compact_generations(
     tomb = gi.tombstones
     if len(gi.gen_dirs) < 2 and tomb is None:
         return gi
+    cap_bytes = MAX_SEGMENTS * SEGMENT_BYTES
+    input_bytes = sum(m.get("input_bytes", cap_bytes) for m in gi.metas)
+    if num_segments is None:
+        num_segments = segments_for_bytes(input_bytes)
     last_epoch = max(int(os.path.basename(g).split("=")[1]) for g in gi.gen_dirs)
     gen_dir = os.path.join(out_dir, "generations", f"gen={last_epoch + 1:010d}")
 
@@ -521,6 +548,8 @@ def compact_generations(
         "compacted_from": [os.path.basename(g) for g in gi.gen_dirs],
         "partitions": segment_metrics(spark, os.path.join(gen_dir, "segments")),
     }
+    if all("input_bytes" in m for m in gi.metas):
+        manifest["input_bytes"] = input_bytes
     with open(os.path.join(gen_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1)
     for g in gi.gen_dirs:

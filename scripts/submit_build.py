@@ -28,7 +28,10 @@ def main() -> None:
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="content")
     ap.add_argument("--mode", default="code")
-    ap.add_argument("--num-segments", type=int, default=32)
+    ap.add_argument(
+        "--num-segments", type=int, default=None,
+        help="segment partitions; default: sized from the input, one per "
+             "4 MiB of document text, between 1 and 32")
     ap.add_argument("--postings-per-group", type=int, default=50_000)
     ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--partition-by", choices=["term", "doc", "auto"], default="auto")

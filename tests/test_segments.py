@@ -11,10 +11,14 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
+from kma_information_retrieval_spark.index import segments
 from kma_information_retrieval_spark.index.segments import (
+    MAX_SEGMENTS,
+    SEGMENT_BYTES,
     build_index,
     load_index,
     part_id_for,
+    segments_for_bytes,
     verify_content_integrity,
 )
 from kma_information_retrieval_spark.index.wand import bm25_topk_batch, bm25_topk_segments
@@ -127,11 +131,10 @@ def test_content_integrity(seg_index, docs, spark):
     assert verify_content_integrity(seg_index, tampered) == 1
 
 
-def test_checkpoint_resume(spark, docs, oracle, tmp_path_factory):
-    """Kill-and-resume: drop some committed partitions from the manifest
-    and segment dir, rebuild with resume=True, final index identical."""
-    out = str(tmp_path_factory.mktemp("resume"))
-    build_index(spark, docs, out, num_segments=8, postings_per_group=40, block_size=16)
+def _crash_and_resume(spark, docs, out, oracle, **build_kwargs):
+    """Drop committed partitions 0..2 from the manifest and the segment
+    dir, rebuild with resume=True, and check the final index is
+    identical. Returns the resumed manifest."""
     with open(os.path.join(out, "manifest.json")) as f:
         manifest = json.load(f)
     full = {
@@ -147,10 +150,7 @@ def test_checkpoint_resume(spark, docs, oracle, tmp_path_factory):
     with open(os.path.join(out, "manifest.json"), "w") as f:
         json.dump(manifest, f)
 
-    m2 = build_index(
-        spark, docs, out, num_segments=8, postings_per_group=40, block_size=16,
-        resume=True,
-    )
+    m2 = build_index(spark, docs, out, resume=True, **build_kwargs)
     assert set(m2["partitions"]) >= set(lost)
     resumed = {
         (r["term"], r["salt"]): (r["df"], bytes(r["doc_bytes"]))
@@ -161,6 +161,64 @@ def test_checkpoint_resume(spark, docs, oracle, tmp_path_factory):
     got = bm25_topk_segments(load_index(spark, out), ["index", "compute"], 10)
     want = oracle.bm25_topk(["index", "compute"], 10)
     assert [d for d, _ in got] == [d for d, _ in want]
+    return m2
+
+
+def test_checkpoint_resume(spark, docs, oracle, tmp_path_factory):
+    """Kill-and-resume: drop some committed partitions from the manifest
+    and segment dir, rebuild with resume=True, final index identical."""
+    out = str(tmp_path_factory.mktemp("resume"))
+    build_index(spark, docs, out, num_segments=8, postings_per_group=40, block_size=16)
+    _crash_and_resume(spark, docs, out, oracle, num_segments=8,
+                      postings_per_group=40, block_size=16)
+
+
+@pytest.mark.parametrize("n_bytes, want", [
+    (0, 1),
+    (SEGMENT_BYTES, 1),
+    (SEGMENT_BYTES + 1, 2),
+    (MAX_SEGMENTS * SEGMENT_BYTES, MAX_SEGMENTS),
+    (MAX_SEGMENTS * SEGMENT_BYTES + 1, MAX_SEGMENTS),
+    (1 << 40, MAX_SEGMENTS),
+])
+def test_segments_for_bytes(n_bytes, want):
+    assert segments_for_bytes(n_bytes) == want
+
+
+def test_default_build_sizes_from_input(spark, tmp_path):
+    """A default-argument build of a tiny corpus is one segment. n_docs
+    counts the token-free docs too, and input_bytes is the UTF-8 byte
+    total of the text, not its character count."""
+    rows = [(1, "héllo world hello"), (2, "a b"), (3, ""), (4, "world wide web")]
+    docs = spark.createDataFrame(rows, "doc_id long, content string")
+    out = str(tmp_path / "idx")
+    m = build_index(spark, docs, out)
+    assert m["num_segments"] == 1
+    assert m["n_docs"] == 4 and m["n_docs_tokened"] == 2
+    assert m["input_bytes"] == sum(len(c.encode()) for _, c in rows)
+    assert m["input_bytes"] > sum(len(c) for _, c in rows)
+    assert set(m["partitions"]) == {"0"}
+    assert [n for n in os.listdir(os.path.join(out, "segments"))
+            if n.startswith("part_id=")] == ["part_id=0"]
+    idx = load_index(spark, out)
+    assert idx.docmap.count() == 4
+    assert {r["doc_id"] for r in idx.query("world").collect()} == {1, 4}
+
+
+def test_resume_keeps_sized_segment_count(spark, docs, oracle, tmp_path, monkeypatch):
+    """A resume after a default-sized build keeps the committed count,
+    even when sizing the same input again would give another."""
+    n_bytes = docs.agg(F.sum(F.octet_length("content"))).collect()[0][0]
+    # shrink the per-segment target so the 200-doc corpus sizes to 8
+    monkeypatch.setattr(segments, "SEGMENT_BYTES", -(-n_bytes // 8))
+    out = str(tmp_path / "idx")
+    m = build_index(spark, docs, out, postings_per_group=40, block_size=16)
+    monkeypatch.undo()
+    assert m["num_segments"] == 8
+    assert segments_for_bytes(m["input_bytes"]) == 1
+    m2 = _crash_and_resume(spark, docs, out, oracle, postings_per_group=40,
+                           block_size=16)
+    assert m2["num_segments"] == 8
 
 
 def test_persisted_wildcard_tables(seg_index, oracle):

@@ -6,9 +6,9 @@ a term shared by several queries, a term repeated inside one query, a
 query whose terms are all absent (it yields no rows), and a rare term
 present in only some doc-layout parts. A doc-layout and a term-layout
 index over the same docs must return bit-identical (doc_id, score)
-lists for every strategy, rank-equal to ``OracleIndex``. A
-two-generation index with tombstones covers the rescaled bounds and the
-deleted-doc mask.
+lists for every strategy, rank-equal to ``OracleIndex``, at 8 segments
+and at 1, where every layout is a single shard. A two-generation index
+with tombstones covers the rescaled bounds and the deleted-doc mask.
 """
 
 from __future__ import annotations
@@ -29,18 +29,26 @@ from kma_information_retrieval_spark.streaming.incremental import (
 STRATEGIES = ("exact", "wand", "maxscore")
 
 
-@pytest.fixture(scope="module")
-def layouts(spark, docs, tmp_path_factory):
-    base = tmp_path_factory.mktemp("shard_scorer")
+def _build_layouts(spark, docs, base, num_segments):
     out = {}
     for layout in ("doc", "term"):
         d = str(base / layout)
         # small salt groups and blocks: head terms split into several
         # salted lists of several blocks, so pruning has work to skip
-        build_index(spark, docs, d, num_segments=8, partition_by=layout,
+        build_index(spark, docs, d, num_segments=num_segments, partition_by=layout,
                     with_positions=False, postings_per_group=40, block_size=16)
         out[layout] = load_index(spark, d)
     return out
+
+
+@pytest.fixture(scope="module")
+def layouts(spark, docs, tmp_path_factory):
+    return _build_layouts(spark, docs, tmp_path_factory.mktemp("shard_scorer"), 8)
+
+
+@pytest.fixture(scope="module")
+def one_segment_layouts(spark, docs, tmp_path_factory):
+    return _build_layouts(spark, docs, tmp_path_factory.mktemp("shard_scorer_1"), 1)
 
 
 @pytest.fixture(scope="module")
@@ -81,7 +89,7 @@ def test_rare_term_misses_some_doc_parts(layouts, rare_term):
     assert with_term and with_term < parts
 
 
-def test_layouts_agree_bit_exactly_with_oracle(layouts, batch, oracle):
+def _assert_layouts_agree(layouts, batch, oracle):
     results = {}
     for strategy in STRATEGIES:
         for layout, idx in layouts.items():
@@ -95,6 +103,17 @@ def test_layouts_agree_bit_exactly_with_oracle(layouts, batch, oracle):
     for qid, terms in batch.items():
         if qid != "absent":
             _assert_oracle_ranking(base[qid], oracle.bm25_topk(terms, 10))
+
+
+def test_layouts_agree_bit_exactly_with_oracle(layouts, batch, oracle):
+    _assert_layouts_agree(layouts, batch, oracle)
+
+
+def test_layouts_agree_at_one_segment(one_segment_layouts, batch, oracle):
+    for idx in one_segment_layouts.values():
+        assert idx.meta["num_segments"] == 1
+        assert set(idx.meta["partitions"]) == {"0"}
+    _assert_layouts_agree(one_segment_layouts, batch, oracle)
 
 
 def test_scoring_runs_as_one_arrow_call_per_shard(layouts, batch):

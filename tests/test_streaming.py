@@ -3,10 +3,12 @@ cross-generation merge rank-identity vs the oracle on the full corpus."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from kma_information_retrieval_spark.corpus import CORPUS_SCHEMA, local_corpus
 from kma_information_retrieval_spark.oracle import OracleIndex
@@ -442,6 +444,70 @@ def test_delete_then_compact_refreshes_stats(spark, tmp_path_factory):
     gi2 = compact_generations(spark, out, num_segments=2)
     assert len(gi2.gen_dirs) == 1 and gi2.n_docs == 60 - len(deleted) - 1
     assert 1 not in {r["doc_id"] for r in gi2.query("alpha").collect()}
+
+
+def test_compaction_sizes_from_input_bytes(spark, tmp_path, monkeypatch):
+    """Default-sized generations compact into a generation sized from
+    their summed input_bytes, and the result equals a from-scratch
+    index over the same docs."""
+    from kma_information_retrieval_spark.index import segments
+    from kma_information_retrieval_spark.streaming import incremental
+
+    # a per-segment target small enough that the 60 tiny docs size to
+    # more than one segment, and their sum to more than either half
+    monkeypatch.setattr(segments, "SEGMENT_BYTES", 512)
+    out = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta doc{i % 7} gamma{i % 3} delta") for i in range(60)],
+        "doc_id long, content string",
+    )
+    for i, half in enumerate((docs.filter(F.col("doc_id") < 20),
+                              docs.filter(F.col("doc_id") >= 20))):
+        segments.build_index(
+            spark, half, os.path.join(out, "generations", f"gen={i:010d}"))
+    metas = load_generations(spark, out).metas
+    total = sum(m["input_bytes"] for m in metas)
+    assert [m["num_segments"] for m in metas] == [
+        segments.segments_for_bytes(m["input_bytes"]) for m in metas]
+    want_segments = segments.segments_for_bytes(total)
+    assert want_segments > max(m["num_segments"] for m in metas)
+
+    gi = incremental.compact_generations(spark, out)
+    assert len(gi.gen_dirs) == 1
+    meta = gi.metas[0]
+    assert meta["num_segments"] == want_segments
+    assert meta["input_bytes"] == total
+    oi = _tiny_oracle()
+    assert gi.n_docs == 60 and abs(gi.avgdl - oi.avgdl) < 1e-12
+    for terms in (["doc1", "alpha"], ["gamma2", "doc3", "delta"]):
+        got = gi.bm25_topk(terms, 10)
+        want = oi.bm25_topk(terms, 10)
+        assert [d for d, _ in got] == [d for d, _ in want]
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, rel_tol=1e-12)
+    for q in ('"beta doc1"', "gamma0 and not doc3", "doc*"):
+        assert {r["doc_id"] for r in gi.query(q).collect()} == oi.search(q), q
+
+
+def test_compaction_without_input_bytes_sizes_to_cap(spark, tmp_path):
+    """A source manifest that predates input_bytes counts as the cap."""
+    from kma_information_retrieval_spark.index.segments import MAX_SEGMENTS
+    from kma_information_retrieval_spark.streaming.incremental import (
+        compact_generations,
+    )
+
+    out = str(tmp_path / "idx")
+    _tiny_gens(spark, out)
+    mp = os.path.join(out, "generations", "gen=0000000001", "manifest.json")
+    with open(mp) as f:
+        meta = json.load(f)
+    del meta["input_bytes"]
+    with open(mp, "w") as f:
+        json.dump(meta, f)
+    gi = compact_generations(spark, out)
+    assert gi.metas[0]["num_segments"] == MAX_SEGMENTS
+    assert "input_bytes" not in gi.metas[0]
+    assert gi.n_docs == 60
 
 
 def test_mixed_old_new_generation_schemas(spark, tmp_path_factory):

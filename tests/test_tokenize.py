@@ -6,10 +6,12 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
 from kma_information_retrieval_spark.functions.tokenize import (
     _int32_offsets,
     bigrams_expr,
+    fan_out,
     tokenize_expr,
 )
 from kma_information_retrieval_spark.oracle import tokenize as py_tokenize
@@ -78,3 +80,18 @@ def test_positions_offsets_refuse_int32_overflow():
     assert _int32_offsets(np.array([limit - 1, 1]))[-1] == limit
     with pytest.raises(OverflowError):
         _int32_offsets(np.array([limit, 1], dtype=np.int64))
+
+
+def test_fan_out_cached_and_streaming_frames(spark):
+    """A cached frame with fewer partitions than slots fans out; a
+    streaming frame, whose inputFiles() raises, passes through."""
+    slots = spark.sparkContext.defaultParallelism
+    cached = spark.range(10).coalesce(1).cache()
+    try:
+        assert fan_out(cached).rdd.getNumPartitions() == slots
+    finally:
+        cached.unpersist()
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(AnalysisException):
+        stream.inputFiles()
+    assert fan_out(stream) is stream
